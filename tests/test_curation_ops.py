@@ -308,3 +308,23 @@ def test_require_unique_doc_ids_guard(spark):
     )
     with pytest.raises(ValueError, match="NULL doc_id"):
         require_unique_doc_ids(withnull, "t")
+
+
+def test_simhash_frames_reject_reserved_column_names(spark):
+    """Input guards raise ValueError (not ``assert``, which ``python
+    -O`` strips): a column named like an internal projection would be
+    silently clobbered."""
+    from data_ingestor_gluejob_script_spark.queries.textops import (
+        simhash16_frame,
+        simhash64_frame,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", "x")], "doc_id long, text string, _w string"
+    )
+    with pytest.raises(ValueError, match="reserved internal names"):
+        simhash16_frame(docs, carry_cols=("_w",))
+    with pytest.raises(ValueError, match="reserved internal names"):
+        simhash16_frame(docs.withColumnRenamed("doc_id", "_h"), id_col="_h")
+    with pytest.raises(ValueError, match="reserved internal names"):
+        simhash64_frame(docs.withColumnRenamed("doc_id", "_hlo"), id_col="_hlo")

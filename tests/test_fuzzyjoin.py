@@ -257,6 +257,7 @@ def test_pass_shuffle_cleanup_mechanism(spark):
     _drop_shuffles."""
     import glob
     import os
+    import tempfile
 
     from pyspark.storagelevel import StorageLevel
 
@@ -266,10 +267,21 @@ def test_pass_shuffle_cleanup_mechanism(spark):
     )
 
     sc = spark.sparkContext
+    # Block-manager dirs live under the configured local dirs, resolved
+    # in Spark's own order: SPARK_LOCAL_DIRS, then spark.local.dir,
+    # then the temp dir.
+    local_dirs = (
+        os.environ.get("SPARK_LOCAL_DIRS")
+        or sc.getConf().get("spark.local.dir")
+        or tempfile.gettempdir()
+    ).split(",")
 
     def shuffle_bytes():
         total = 0
-        for d in glob.glob("/tmp/blockmgr-*"):
+        blockmgr_dirs = [
+            d for base in local_dirs for d in glob.glob(f"{base}/blockmgr-*")
+        ]
+        for d in blockmgr_dirs:
             for root, _, files in os.walk(d):
                 for f in files:
                     if "shuffle" not in f:
@@ -292,6 +304,7 @@ def test_pass_shuffle_cleanup_mechanism(spark):
     created = _live_shuffle_ids(sc) - before_ids
     assert created, "checkpointed job should have registered shuffles"
     grew = shuffle_bytes()
+    assert grew > 0, f"no shuffle files found under {local_dirs}"
     _drop_shuffles(sc, created)
     assert _live_shuffle_ids(sc) & created == set()
     assert shuffle_bytes() < grew

@@ -1097,3 +1097,49 @@ def test_upsert_dup_id_batch_and_backfill_arm_match_window_form(
         for r in _read_lake(spark, lake2, SUBS.name).collect()
     }
     assert got2 == got
+
+
+def test_writer_rejects_null_id(spark, lake):
+    """The merge's plain-equality anti join treats the id as a primary
+    key, so a NULL id must fail the write before anything touches the
+    lake — on the first write (no table root appears) and into an
+    existing lake (files and rows unchanged)."""
+    from data_ingestor_gluejob_script_spark.pipeline import (
+        lake_table_root,
+        write_partitioned_upsert,
+    )
+
+    def batch(*rows):
+        return spark.createDataFrame(
+            [tuple(r[c] for c in SUBS.columns) for r in rows],
+            SUBS.spark_schema,
+        )
+
+    null_id = _sub(None, "2024-01-10 10:00:00", "2024-01-10 10:00:00")
+    good = _sub("s1", "2024-01-10 10:00:00", "2024-01-10 10:00:00")
+    root = lake_table_root(lake, SUBS.name)
+
+    with pytest.raises(ValueError, match="NULL id"):
+        write_partitioned_upsert(spark, batch(good, null_id), SUBS, lake)
+    assert not os.path.exists(root)
+
+    write_partitioned_upsert(spark, batch(good), SUBS, lake)
+
+    def snapshot():
+        files = sorted(
+            (os.path.relpath(os.path.join(d, f), root),
+             os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(root)
+            for f in fs
+        )
+        rows = sorted(
+            tuple(r) for r in _read_lake(spark, lake, SUBS.name).collect()
+        )
+        return files, rows
+
+    before = snapshot()
+    changed = _sub("s1", "2024-01-10 10:00:00", "2024-01-20 10:00:00",
+                   status="canceled")
+    with pytest.raises(ValueError, match="NULL id"):
+        write_partitioned_upsert(spark, batch(changed, null_id), SUBS, lake)
+    assert snapshot() == before

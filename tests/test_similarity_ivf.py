@@ -325,3 +325,17 @@ def test_neardup_sig_bits_sizing_and_extended_planes(spark):
             if float(vecs[i] @ w) >= 0:
                 want += 1 << j
         assert got[i] == want, i
+
+
+def test_lit_vec_rejects_non_finite_weight():
+    """``repr(inf)`` renders as unparsable SQL; the guard raises
+    ValueError (not ``assert``, which ``python -O`` strips)."""
+    import math
+
+    import pytest
+
+    from data_ingestor_gluejob_script_spark.queries.similarity import _lit_vec
+
+    for bad in (math.inf, -math.inf, math.nan):
+        with pytest.raises(ValueError, match="non-finite"):
+            _lit_vec([0.5, bad])
