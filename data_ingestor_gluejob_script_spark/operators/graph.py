@@ -31,8 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import pin
-
 # Rounds used by the most recent connected_components call — exposed
 # for tests/benchmarks that pin the O(log diameter) convergence rate.
 last_rounds: int = 0
@@ -95,10 +93,10 @@ def connected_components(
     src, dst = edges.columns[0], edges.columns[1]
     # ONE evaluation of the (expensive) edge plan, pinned for every
     # consumer below
-    eb = pin(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-            F.col("a") != F.col("b")
-        )
+    eb = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .localCheckpoint()
     )
     # ONE probe action decides the strategy AND (for small graphs)
     # delivers every edge: limit(threshold+1) over the cached
@@ -137,14 +135,16 @@ def connected_components(
         return edges.sparkSession.createDataFrame(rows, schema)
     # distributed path: symmetrize once (from the CHECKPOINTED edges —
     # cheap), so propagation only needs one direction
-    sym = pin(
+    sym = (
         eb.union(eb.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
+        .localCheckpoint()
     )
-    labels = pin(
+    labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
+        .localCheckpoint()
     )
     for rnd in range(1, max_iter + 1):
         last_rounds = rnd
@@ -183,7 +183,7 @@ def connected_components(
                 ).alias("_changed"),
             )
         )
-        new_labels = pin(new_labels)
+        new_labels = new_labels.localCheckpoint()
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")
         if changed == 0:

@@ -47,20 +47,17 @@ tests/test_bpe.py, benched as ``x_bpe_encode``.
 
 from __future__ import annotations
 
-import logging
 from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ._util import load, spread
 
-log = logging.getLogger(__name__)
-
-# The merge-table model artifact's schema — single source for both
-# trainers, save_merges/load_merges, and every consumer.
+# The merge-table model artifact's schema — single source for the
+# trainer, save_merges/load_merges, and every consumer.
 _MERGES_SCHEMA = T.StructType(
     [
         T.StructField("rank", T.LongType(), False),
@@ -199,219 +196,6 @@ def bpe_train(
         )
     freqs = {r["word"]: r["count"] for r in wf.collect()}
     return _merges_frame(spark, _train_merges(freqs, n_merges, min_pair_count))
-
-
-def bpe_train_distributed(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    checkpoint_every: int = 16,
-    batch_merges: int = 8,
-    candidate_pool: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """The fully-distributed twin of ``bpe_train`` for vocabularies
-    too large to collect: the (word, freq, symbols) state stays a
-    DataFrame; each ROUND is ONE weighted pair-count aggregation
-    (explode adjacent pairs → partial-aggregated sum → top-pool
-    collect) from which up to ``batch_merges`` COMPATIBLE merges are
-    selected and applied together in one map-only pure-Catalyst fold
-    pass. Produces the IDENTICAL merge table to
-    ``bpe_train(max_words=None)`` (same counts, same lexicographic
-    tie-break — parity-asserted in tests); note ``bpe_train``'s
-    DEFAULT frequency-truncates at 2^20 words, so on a vocabulary
-    larger than that the two differ unless the caller passes
-    ``max_words=None`` — which is exactly the regime this trainer
-    exists for.
-
-    Compatible-merge batching (round-10 verdict item — one
-    aggregation PER MERGE meant a 32k-merge vocabulary cost 32k Spark
-    jobs): from the round's candidates sorted by (count desc, pair),
-    a PREFIX is selected greedily, stopping at the first candidate
-    that could diverge from the sequential trainer. The selected set
-    S provably equals sequential's next |S| merges because selection
-    stops when ANY of these fail:
-
-    - *symbol disjointness*: the candidate's {left, right, merged}
-      must not intersect any selected merge's {left, right, merged}.
-      Applying S then cannot change the candidate's count (a merge
-      only touches pairs containing its symbols), and — since
-      selection is prefix-only — any pair that outranks the candidate
-      and merely DECREASES under S was itself selected, not skipped.
-    - *spawn dominance*: applying (x, y) spawns new pairs (w, x+y) /
-      (x+y, z) whose counts are bounded by the OLD counts of existing
-      pairs (w, x) / (y, z). If any such parent has count >= the
-      candidate's, a spawn could tie-or-beat it (ties matter: the
-      lexicographic tie-break could prefer the spawn), so the batch
-      stops. Parents are scanned over the collected pool, which is
-      sufficient because:
-    - *pool completeness*: beyond the first pick, a candidate is only
-      accepted while its count strictly exceeds the pool's smallest
-      collected count (or the pool holds every pair), so every pair
-      ranking at-or-above the candidate is visible.
-
-    On natural-language corpora the hottest pairs share symbols
-    ('e', 't', ...), so early rounds batch little and the budget
-    tends toward one aggregation per merge; on the flat tail of a
-    large vocabulary batches fill up. Worst case is ``n_merges``
-    rounds — for a full 32k-merge vocabulary prefer ``bpe_train``
-    (Heaps-bounded driver trainer) unless the vocabulary genuinely
-    exceeds driver memory (a loud log line repeats this guidance).
-    ``stats`` (optional dict) receives ``rounds`` and
-    ``batch_sizes`` so callers and tests can audit the job budget.
-
-    The fold trick: a left-to-right greedy single-pass merge is
-    expressible as ``F.aggregate``: append each symbol unless the
-    accumulator's LAST element is ``left`` and the symbol is
-    ``right`` — the merged token ``left+right`` can never equal
-    ``left`` (``right`` is non-empty), so a merged token is never
-    re-merged within the pass, exactly the single-pass semantics.
-    Batched merges nest their folds in selection order (equivalently
-    any order — their symbols are disjoint) in ONE select. Lineage
-    grows per round, so the state is ``localCheckpoint``-ed every
-    ``checkpoint_every`` accumulated merges (at production scale, a
-    real checkpoint dir)."""
-    spark = docs.sparkSession
-    if n_merges > 1024:
-        log.warning(
-            "bpe_train_distributed: %d merges may cost up to %d "
-            "distributed aggregation rounds (compatible-merge "
-            "batching reduces this only where hot pairs are "
-            "symbol-disjoint). Unless the vocabulary exceeds driver "
-            "memory, bpe_train (driver trainer, one distributed "
-            "word-count pass) is the right tool.",
-            n_merges,
-            n_merges,
-        )
-    # Character decomposition via a zero-width split that can never
-    # yield a trailing empty element: F.split(word, '') returns the
-    # exact character array on Spark 4.x but a trailing '' on 3.x
-    # (round-10 advice finding — the repo pins no Spark version, and
-    # a phantom '' symbol would silently corrupt pair counts). The
-    # negative lookahead '(?!$)' matches every inter-character
-    # position except end-of-string on both lines.
-    state = word_freq_frame(docs, text_col).select(
-        "word", "count", F.split(F.col("word"), "(?!$)").alias("syms")
-    ).localCheckpoint()
-    merges: list[tuple[str, str]] = []
-    floor = max(min_pair_count, 1)
-    pool = candidate_pool or max(32, 4 * max(batch_merges, 1))
-    rounds = 0
-    batch_sizes: list[int] = []
-    since_ckpt = 0
-
-    def make_fold(a, b, merged):
-        def fold(acc, x):
-            # try_element_at: NULL (not an ANSI error) on the
-            # empty accumulator — NULL == a is NULL, so the
-            # when() falls through to append, as wanted
-            last = F.try_element_at(acc, F.lit(-1))
-            return F.when(
-                (last == F.lit(a)) & (x == F.lit(b)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(F.lit(merged)),
-                ),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        return fold
-
-    while len(merges) < n_merges:
-        pair_counts = (
-            state.select(
-                F.col("count"),
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(
-                            F.col("syms"), 1, F.size("syms") - 1
-                        ).alias("a"),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1)
-                        .alias("b"),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("count").alias("n"))
-        )
-        cand = (
-            pair_counts.orderBy(
-                F.col("n").desc(), F.col("a"), F.col("b")
-            )
-            .limit(pool)
-            .collect()
-        )
-        rounds += 1
-        if not cand or cand[0]["n"] < floor:
-            break
-        truncated = len(cand) == pool
-        c_min = cand[-1]["n"]
-
-        # -------- driver-side compatible-prefix selection (see
-        # docstring for the parity argument; stop at FIRST rejection —
-        # a skipped candidate would reorder the sequential trainer)
-        selected: list[tuple[str, str]] = []
-        touched: set[str] = set()
-        lefts: set[str] = set()
-        rights: set[str] = set()
-        for i, r in enumerate(cand):
-            a, b, c = r["a"], r["b"], r["n"]
-            if (
-                len(merges) + len(selected) >= n_merges
-                or len(selected) >= max(batch_merges, 1)
-                or c < floor
-            ):
-                break
-            if selected:
-                # pool completeness: every pair ranking at-or-above c
-                # must be visible for the dominance scan
-                if truncated and c <= c_min:
-                    break
-                # symbol disjointness
-                if {a, b, a + b} & touched:
-                    break
-                # spawn dominance: an existing pair (w, x) / (y, z)
-                # with count >= c, adjacent to a selected (x, y),
-                # bounds a spawned pair that could tie-or-beat c.
-                # Selected pairs can never trigger (their symbols are
-                # mutually disjoint), so no need to exclude them.
-                danger = False
-                for q in cand:
-                    if q["n"] < c:
-                        break  # sorted: no more parents at-or-above c
-                    if q["b"] in lefts or q["a"] in rights:
-                        danger = True
-                        break
-                if danger:
-                    break
-            selected.append((a, b))
-            lefts.add(a)
-            rights.add(b)
-            touched |= {a, b, a + b}
-
-        if not selected:  # cannot happen (cand[0] passes), but guard
-            break
-        merges.extend(selected)
-        batch_sizes.append(len(selected))
-
-        # -------- apply the whole batch in ONE map-only pass: nested
-        # folds in selection order (symbols disjoint ⇒ order-free)
-        expr: Column = F.col("syms")
-        for a, b in selected:
-            expr = F.aggregate(
-                expr,
-                F.array().cast("array<string>"),
-                make_fold(a, b, a + b),
-            )
-        state = state.select("word", "count", expr.alias("syms"))
-        since_ckpt += len(selected)
-        if since_ckpt >= checkpoint_every:
-            state = state.localCheckpoint()
-            since_ckpt = 0
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["batch_sizes"] = batch_sizes
-    return _merges_frame(spark, merges)
 
 
 def save_merges(merges: DataFrame, path: str) -> None:

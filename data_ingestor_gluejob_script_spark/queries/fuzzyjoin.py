@@ -80,11 +80,7 @@ DISTINCT'd while still 16-byte rows (a true pair shares up to
 C(len,<=d) variants), the strings join back at candidate-pair size,
 the levenshtein verify is a map (banded O(d*len) via the threshold
 form), and the only corpus-sized shuffles left are the final
-fan-out equi-joins whose output is the answer itself. When the
-candidate shuffle's scratch exceeds the host (the sf100 decade-3
-smoke: 60+ GB vs 57 GB local disk), ``passes=B`` shards candidate
-generation into B sequential pmod(h, B) passes — identical result,
-~1/B peak scratch; see _value_pairs.
+fan-out equi-joins whose output is the answer itself.
 
 NULL handling (package convention): NULL strings cannot match
 anything (unknown, not empty) — they are dropped from both sides and
@@ -94,13 +90,8 @@ matches anything within distance max_dist of it.
 
 from __future__ import annotations
 
-import logging
-import os
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def _one_deletions(v: Column) -> Column:
@@ -162,97 +153,6 @@ def _variant_index(keyed: DataFrame, max_dist: int) -> DataFrame:
     )
 
 
-def _live_shuffle_ids(sc) -> set[int]:
-    """Shuffle ids currently registered with the driver's map-output
-    tracker (classic local/cluster mode via the py4j seam; an empty
-    set on runtimes that hide the JVM). Diagnostic/test seam — pass
-    attribution itself is plan-scoped (``_plan_shuffle_ids``), not a
-    tracker diff, so it cannot see (or touch) other jobs' shuffles."""
-    try:
-        tracker = sc._jvm.org.apache.spark.SparkEnv.get().mapOutputTracker()
-        it = tracker.shuffleStatuses().keySet().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-    except Exception:  # noqa: BLE001 — connect mode / no JVM seam
-        return set()
-
-
-def _plan_shuffle_ids(df: DataFrame) -> set[int]:
-    """Shuffle ids belonging to THIS DataFrame's executed query —
-    read by walking its (adaptive) physical plan for materialized
-    ``ShuffleQueryStageExec``/``ShuffleExchangeExec`` nodes after the
-    action ran. This is exact per-query attribution: a concurrent
-    job's shuffles can never appear in another query's plan tree, so
-    cleanup scoped to these ids is safe on a SHARED SparkSession
-    (the round-12 design diffed the global map-output tracker around
-    the pass, which could attribute — and delete — a concurrent
-    query's shuffle registered inside the window).
-
-    Walk rules: AQE wraps the final plan in AdaptiveSparkPlanExec
-    (descend via ``executedPlan()``); materialized stages are
-    ``*QueryStageExec`` leaves (descend via ``plan()``);
-    ``ReusedExchangeExec`` aliases an exchange owned by the same
-    query (descend via ``child()`` — the set dedups); subquery plans
-    hang off expressions (``subqueries()``). Fail-safe: any py4j
-    surprise returns the ids found so far — a missed id leaks one
-    pass's scratch until ContextCleaner gets to it, it never deletes
-    someone else's files."""
-    ids: set[int] = set()
-    try:
-        stack = [df._jdf.queryExecution().executedPlan()]
-        while stack:
-            node = stack.pop()
-            cls = node.getClass().getSimpleName()
-            if cls == "AdaptiveSparkPlanExec":
-                stack.append(node.executedPlan())
-                continue
-            if cls.endswith("QueryStageExec"):
-                stack.append(node.plan())
-                continue
-            if cls == "ReusedExchangeExec":
-                stack.append(node.child())
-                continue
-            if cls == "ShuffleExchangeExec":
-                ids.add(node.shuffleDependency().shuffleId())
-            it = node.children().iterator()
-            while it.hasNext():
-                stack.append(it.next())
-            try:
-                it = node.subqueries().iterator()
-                while it.hasNext():
-                    stack.append(it.next())
-            except Exception:  # noqa: BLE001 — no subquery seam
-                pass
-    except Exception:  # noqa: BLE001 — connect mode / plan-shape drift
-        pass
-    return ids
-
-
-def _drop_shuffles(sc, ids: set[int]) -> None:
-    """Explicitly delete the given shuffles' files (blocking). The
-    sequential-pass design DEPENDS on this: completed passes' shuffle
-    files measurably survive gc.collect() + System.gc() nudges on
-    this JVM (ContextCleaner is reference-triggered and the
-    references die too slowly), so without explicit cleanup B passes
-    re-accumulate the one-shot scratch and the sharding buys
-    nothing. Only ever called on shuffles created by a pass whose
-    result has already been checkpointed — their lineage is dead —
-    and attributed by walking that pass's OWN executed plan
-    (``_plan_shuffle_ids``), so a concurrent job on the same
-    SparkSession is never affected: passes > 1 is safe on shared
-    drivers (Thrift server, concurrent notebook cells) as of round
-    13; the only cost of concurrency is that the other job competes
-    for the scratch headroom the sharding exists to bound."""
-    try:
-        cleaner = sc._jsc.sc().cleaner().get()
-        for sid in sorted(ids):
-            cleaner.doCleanupShuffle(sid, True)
-    except Exception:  # noqa: BLE001 — best-effort on exotic runtimes
-        pass
-
-
 def _vid_col(s: Column) -> Column:
     """Compact value id: xxhash64 of the dictionary string. A seam so
     tests can force pathological collisions and pin that the
@@ -261,11 +161,11 @@ def _vid_col(s: Column) -> Column:
 
 
 def _candidate_vid_pairs(var: DataFrame, max_dist: int) -> DataFrame:
-    """Distinct unordered candidate (vid_a, vid_b) pairs from one
-    slice of the (vid, len, h) variant index: self-join on the
-    variant hash (vid order dedups the unordered pair and keeps
-    equal values out), length gap as a cheap cross-collision cut,
-    DISTINCT while the rows are still 16 bytes."""
+    """Distinct unordered candidate (vid_a, vid_b) pairs from the
+    (vid, len, h) variant index: self-join on the variant hash (vid
+    order dedups the unordered pair and keeps equal values out),
+    length gap as a cheap cross-collision cut, DISTINCT while the rows
+    are still 16 bytes."""
     return (
         var.alias("a")
         .join(var.alias("b"), "h")
@@ -278,9 +178,7 @@ def _candidate_vid_pairs(var: DataFrame, max_dist: int) -> DataFrame:
     )
 
 
-def _value_pairs(
-    dv: DataFrame, max_dist: int, passes: int = 1
-) -> DataFrame:
+def _value_pairs(dv: DataFrame, max_dist: int) -> DataFrame:
     """Distinct verified (s_lo, s_hi, dist) pairs of DIFFERENT
     dictionary values within ``max_dist``, normalized so
     s_lo < s_hi. Shape: key the dictionary with a compact vid
@@ -295,59 +193,8 @@ def _value_pairs(
     sized, dictionary-keyed); verify with banded levenshtein (the
     threshold form). The length filter inside the join is a cheap
     cut for cross-variant hash collisions (genuine shared variants
-    imply the length gap already).
-
-    ``passes`` > 1 shards the WHOLE candidate-generate-and-verify
-    chain into B SEQUENTIAL hash-prefix passes (the round-11 sf100
-    scratch fix; four designs measured in round 12 before this one
-    held):
-
-    Pass i filters the variant index to ``pmod(h, B) == i`` (a map —
-    variant generation re-runs per pass over the checkpointed
-    dictionary, CPU not disk), self-joins that 1/B slice, DISTINCTs
-    the candidate id pairs, joins the strings back, VERIFIES with
-    banded levenshtein, checkpoints only the surviving value pairs
-    (DISK_ONLY, true-match-sized), and then EXPLICITLY DELETES the
-    pass's shuffle files (``_drop_shuffles`` — the ids read from the
-    pass's own executed plan, ``_plan_shuffle_ids``, so concurrent
-    jobs on the session are never touched). Verify-inside-the-
-    pass is load-bearing: on a corpus with dense 2d-neighborhoods
-    (the sf100 bench corpus: dense numeric key suffixes under
-    repeated name prefixes — ~1B ed<=2 candidates whose verify
-    rejects all but ~1/50th) the CANDIDATES, not the variant index,
-    are the dominant bytes, so they must die inside the pass whose
-    scratch gets cleaned, never accumulate as B checkpoints or feed
-    one giant post-union verify. Peak scratch is one pass's join +
-    distinct exchanges plus transient task spill.
-
-    Rejected designs, measured: (a) GC nudges between passes —
-    completed passes' shuffle files survive gc.collect() +
-    System.gc() on this JVM, so B passes re-accumulated the one-shot
-    scratch; (b) one whole-index bucketed table self-joined per pass
-    — exchange-free joins, but writing the table is the same 30+ GB
-    the shuffle was; (c) per-pass bucketed slice tables — bounds the
-    variant side but the candidate-distinct exchanges still
-    accumulate without explicit cleanup; (d) explicit cleanup but
-    verify AFTER the union — per-pass candidate checkpoints grew
-    ~2 GB each and the post-union fan-out shuffled the full ~1B
-    candidate set at once (instrumented: rdd blocks +2 GB/pass while
-    shuffle scratch correctly returned to zero).
-
-    The result is provably identical for any B — a pair is found iff
-    the two values share a variant hash, every hash lives in exactly
-    one pmod class, and the match predicate is per-pair — a pair
-    sharing variants in several classes just surfaces in several
-    passes, which the final verified-pair distinct collapses."""
+    imply the length gap already)."""
     keyed = dv.select(_vid_col(F.col("s")).alias("vid"), "s")
-    if passes > 1:
-        # One shuffle builds the dictionary; B passes (and the
-        # collision arm) re-read it from the block manager instead of
-        # re-running the distinct. DISK_ONLY: the sharded form exists
-        # because the host is resource-tight — parking checkpoint
-        # blocks in the heap (the MEMORY_AND_DISK default) OOMed the
-        # sf100 run with 32 concurrent tasks' execution memory
-        # alongside them.
-        keyed = keyed.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
     # vid-collision arm (round-12 review finding): two DISTINCT
     # values sharing an xxhash64 get one vid, and the self-join's
     # strict vid_a < vid_b can then never emit their pair — the only
@@ -367,50 +214,9 @@ def _value_pairs(
     )
     collision_arm = _verify_string_pairs(collided, max_dist)
     var = _variant_index(keyed, max_dist)
-    if passes <= 1:
-        return _verified_value_pairs(
-            _candidate_vid_pairs(var, max_dist), keyed, max_dist
-        ).union(collision_arm)
-    sc = keyed.sparkSession.sparkContext
-    shards = []
-    for i in range(passes):
-        pass_df = _verified_value_pairs(
-            _candidate_vid_pairs(
-                var.filter(F.pmod(F.col("h"), F.lit(passes)) == i),
-                max_dist,
-            ),
-            keyed,
-            max_dist,
-        )
-        part = pass_df.localCheckpoint(  # eager: the pass job runs HERE
-            storageLevel=StorageLevel.DISK_ONLY
-        )
-        shards.append(part)
-        # the shard holds only VERIFIED pairs — this pass's shuffles
-        # (its corpus-scale footprint: variant join, candidate
-        # distinct, string fan-in) go before the next pass starts.
-        # Attribution is the pass's own executed plan, never a global
-        # tracker diff, so concurrent jobs on the session are safe.
-        pass_ids = _plan_shuffle_ids(pass_df)
-        if not pass_ids:
-            # every pass demonstrably shuffles (variant join +
-            # distinct), so zero ids means the plan walk silently
-            # degraded (renamed node classes, connect-mode runtime):
-            # scratch then accumulates across ALL passes and the
-            # sf100 run can hit the exact disk-full failure sharding
-            # exists to prevent — make the degradation loud.
-            logging.getLogger(__name__).warning(
-                "fuzzy_join pass %d: plan walk found no shuffle ids — "
-                "per-pass scratch cleanup is NOT happening; expect "
-                "shuffle disk to accumulate across passes",
-                i,
-            )
-        _drop_shuffles(sc, pass_ids)
-    # cross-pass duplicates (a pair sharing variants in several pmod
-    # classes) collapse here, on true-match-sized rows
-    return (
-        reduce(DataFrame.union, shards).union(collision_arm).distinct()
-    )
+    return _verified_value_pairs(
+        _candidate_vid_pairs(var, max_dist), keyed, max_dist
+    ).union(collision_arm)
 
 
 def _verify_string_pairs(pairs: DataFrame, max_dist: int) -> DataFrame:
@@ -445,32 +251,8 @@ def _verified_value_pairs(
     return _verify_string_pairs(pairs, max_dist)
 
 
-def _resolve_passes(passes: int | None) -> int:
-    """None -> $SPARK_GRAFT_FUZZY_PASSES (default 1). The env seam
-    lets the scale smoke run the sf100 sharded form without touching
-    the registered query's call site; any B yields identical rows.
-    Env activation is invisible at call sites on shared drivers, so
-    it logs loudly (once per call) when it actually changes the
-    plan shape."""
-    if passes is None:
-        env_b = max(1, int(os.environ.get("SPARK_GRAFT_FUZZY_PASSES", "1")))
-        if env_b > 1:
-            logging.getLogger(__name__).warning(
-                "fuzzy join: SPARK_GRAFT_FUZZY_PASSES=%d activates "
-                "sequential sharded candidate generation (B passes, "
-                "~1/B peak shuffle scratch, per-pass checkpoint + "
-                "plan-scoped shuffle cleanup) for this call",
-                env_b,
-            )
-        return env_b
-    return max(1, passes)
-
-
 def _fuzzy_matches(
-    tagged: DataFrame,
-    max_dist: int,
-    self_mode: bool,
-    passes: int | None = None,
+    tagged: DataFrame, max_dist: int, self_mode: bool
 ) -> DataFrame:
     """Verified (id_a, id_b, s_a, s_b, dist) from the value-pair
     dictionary plus the clone arms. ``tagged`` is (id, side, s)
@@ -478,11 +260,7 @@ def _fuzzy_matches(
     each id carries exactly one value, so every output row descends
     from exactly one value pair (or the disjoint dist-0 clone
     arm)."""
-    vp = _value_pairs(
-        tagged.select("s").distinct(),
-        max_dist,
-        passes=_resolve_passes(passes),
-    )
+    vp = _value_pairs(tagged.select("s").distinct(), max_dist)
     # Directed copies: the left/smaller-id member may hold either
     # value of the unordered pair. One explode over a single vp
     # reference, NOT a union of two selects — a union duplicates the
@@ -581,7 +359,6 @@ def fuzzy_join(
     id_col: str,
     str_col: str,
     max_dist: int = 2,
-    passes: int | None = None,
 ) -> DataFrame:
     """Record linkage: every (left, right) row pair whose ``str_col``
     values are within Levenshtein distance ``max_dist``.
@@ -590,14 +367,7 @@ def fuzzy_join(
     payload-free (join the ids back for more columns). ids must be
     unique per side: the fan-out joins emit one row per id pair
     only because each id carries one value row — duplicated (id, s)
-    input rows would multiply output pairs, not dedup them.
-    ``passes`` shards candidate generation into B sequential
-    hash-prefix passes (identical result, ~1/B peak shuffle scratch
-    — the 100-TB / tight-scratch knob); None reads
-    $SPARK_GRAFT_FUZZY_PASSES, default 1. passes > 1 performs
-    explicit shuffle-file cleanup between passes; cleanup is scoped
-    to each pass's own executed plan (_plan_shuffle_ids), so
-    concurrent jobs on the same SparkSession are safe."""
+    input rows would multiply output pairs, not dedup them."""
     lt = left.select(
         F.col(id_col).alias("id"), F.lit(0).alias("side"),
         F.col(str_col).alias("s"),
@@ -606,9 +376,7 @@ def fuzzy_join(
         F.col(id_col).alias("id"), F.lit(1).alias("side"),
         F.col(str_col).alias("s"),
     ).filter(F.col("s").isNotNull())
-    return _fuzzy_matches(
-        lt.union(rt), max_dist, self_mode=False, passes=passes
-    )
+    return _fuzzy_matches(lt.union(rt), max_dist, self_mode=False)
 
 
 def fuzzy_self_join(
@@ -616,15 +384,13 @@ def fuzzy_self_join(
     id_col: str,
     str_col: str,
     max_dist: int = 2,
-    passes: int | None = None,
 ) -> DataFrame:
     """Near-duplicate value pairs within one table: (id_a, id_b, s_a,
     s_b, dist) with id_a < id_b and levenshtein(s_a, s_b) <=
     max_dist. The dedup-by-name / conform-the-dimension shape.
-    ids must be unique (see fuzzy_join); ``passes`` as in fuzzy_join
-    (plan-scoped cleanup — safe beside concurrent jobs)."""
+    ids must be unique (see fuzzy_join)."""
     t = df.select(
         F.col(id_col).alias("id"), F.lit(0).alias("side"),
         F.col(str_col).alias("s"),
     ).filter(F.col("s").isNotNull())
-    return _fuzzy_matches(t, max_dist, self_mode=True, passes=passes)
+    return _fuzzy_matches(t, max_dist, self_mode=True)

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.graph import connected_components
-from ..session import pin
 from ._util import load, table_rowcount
 
 EMB_DIM = 64  # testdata embeddings.embedding is array<float>[64]
@@ -813,7 +812,7 @@ def semantic_dedup_frame(
         # and the final labeling, and is typically a mapInPandas
         # (encoder) lineage that must not re-run per consumer.
         tagged = None
-        reps = pin(emb.select("vec_id", "emb"))
+        reps = emb.select("vec_id", "emb").localCheckpoint()
     else:
         # Collapse IDENTICAL vectors first (the identical-fingerprint
         # lesson from the SimHash family): clones of one vector are
@@ -846,10 +845,8 @@ def semantic_dedup_frame(
         # One cached copy of (vec_id, emb, class_rep); reps and the
         # rejoin view are now map-side projections over it — every
         # refine round, the assignment, and the labeling re-run only
-        # a filter+project over cached partitions. (At production
-        # scale set SPARK_GRAFT_PIN_LEVEL=DISK_ONLY — session.pin —
-        # so the pinned corpus stays out of execution memory.)
-        tagged = pin(tagged)
+        # a filter+project over cached partitions.
+        tagged = tagged.localCheckpoint()
         reps = tagged.filter(F.col("vec_id") == F.col("class_rep")).select(
             "vec_id", "emb"
         )
@@ -888,10 +885,12 @@ def semantic_dedup_frame(
     # user-specified count is exempt from AQE coalescing; non-empty
     # partitions are still capped by cell cardinality.
     n_spread = emb.sparkSession.sparkContext.defaultParallelism
-    blocked = pin(
+    blocked = (
         assigned.withColumn(
             "norm", F.sqrt(dot(F.col("emb"), F.col("emb")))
-        ).repartition(n_spread, "cell")
+        )
+        .repartition(n_spread, "cell")
+        .localCheckpoint()
     )
     a, b = blocked.alias("a"), blocked.alias("b")
     sim = F.round(
@@ -1138,9 +1137,8 @@ def knn_graph_frame(
         # projection over cached partitions. Costs one cached copy of
         # (vec_id, emb, rep) for all rows instead of distinct-rows'
         # vectors plus a slim member list — the win is one fewer
-        # corpus shuffle+sort, which dominates. Pin level via
-        # session.pin (SPARK_GRAFT_PIN_LEVEL, r16 verdict #7).
-        tagged = pin(tagged)
+        # corpus shuffle+sort, which dominates.
+        tagged = tagged.localCheckpoint()
         members = tagged.select("rep", "vec_id")
         base = tagged.filter(F.col("vec_id") == F.col("rep")).select(
             "vec_id", "emb"

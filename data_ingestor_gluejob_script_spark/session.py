@@ -122,11 +122,8 @@ def get_spark(
         # exactly this cliff — the batch's fragment population crossed
         # 100 entries). Cost: cached compiled classes on the driver
         # heap, tens of MB at this setting — scale-independent, so the
-        # same value is right at 100 TB. Env-overridable for A/B.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        # same value holds at any data size.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -134,41 +131,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def pin_storage_level():
-    """StorageLevel for corpus-sized frame pins (r16 verdict #7).
-
-    The single-evaluation fixes in ``operators/graph`` and
-    ``queries/similarity`` pin corpus-sized frames (candidate-pair
-    edge plans, tagged embedding frames) with ``localCheckpoint``.
-    The default level, MEMORY_AND_DISK, is right for local/bench runs
-    — the pinned partitions are small and a memory hit makes the
-    immediate re-reads cheap — but at 100 TB those frames compete
-    with execution memory in every executor (guide §5: cached data vs
-    execution memory). ``SPARK_GRAFT_PIN_LEVEL=DISK_ONLY`` (or any
-    ``StorageLevel`` attribute name, e.g. MEMORY_AND_DISK_SER)
-    switches every such pin to a level that stays out of the
-    execution pool, the same choice fuzzyjoin's staged passes already
-    hard-code. Unset → None → pyspark's localCheckpoint default,
-    byte-identical behavior to r16."""
-    from pyspark import StorageLevel
-
-    name = os.environ.get("SPARK_GRAFT_PIN_LEVEL", "").strip()
-    if not name:
-        return None
-    level = getattr(StorageLevel, name, None)
-    if level is None:
-        raise ValueError(
-            f"SPARK_GRAFT_PIN_LEVEL={name!r} is not a StorageLevel "
-            "attribute (try DISK_ONLY or MEMORY_AND_DISK_SER)"
-        )
-    return level
-
-
-def pin(df):
-    """``localCheckpoint`` at the configured pin level — one seam for
-    every corpus-sized pin; see :func:`pin_storage_level`."""
-    level = pin_storage_level()
-    if level is None:
-        return df.localCheckpoint()
-    return df.localCheckpoint(storageLevel=level)

@@ -768,7 +768,7 @@ def run_doc_dedup_ingest(
         # and _ledgered_fresh recovers any interrupted swap before
         # reading the lake.
         fresh.coalesce(1).write.mode("append").parquet(lake_dir)
-        _maybe_compact_lakes(spark, lake_dir)
+        compact_append_lakes(spark, lake_dir)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -836,7 +836,7 @@ def run_url_dedup_ingest(
         # same one-file-per-batch + incremental tail compaction as
         # the doc twin (r16); idempotence + swap recovery identical
         fresh.coalesce(1).write.mode("append").parquet(lake_dir)
-        _maybe_compact_lakes(spark, lake_dir)
+        compact_append_lakes(spark, lake_dir)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -903,7 +903,7 @@ def run_web_curation_ingest(
         # same one-file-per-batch + incremental tail compaction as
         # the doc twin (r16); idempotence + swap recovery identical
         fresh.coalesce(1).write.mode("append").parquet(lake_dir)
-        _maybe_compact_lakes(spark, lake_dir)
+        compact_append_lakes(spark, lake_dir)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -920,9 +920,7 @@ def run_web_curation_ingest(
 #: batch side — there is no shuffle fallback by design — so an
 #: oversized batch must fail with an actionable message, not an opaque
 #: broadcast OOM mid-query (r13 advice).
-BATCH_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_BATCH_MAX_ROWS", 10_000_000)
-)
+BATCH_BROADCAST_MAX_ROWS = 10_000_000
 
 
 def _assert_broadcast_contract(batch_df: DataFrame, what: str) -> None:
@@ -936,8 +934,7 @@ def _assert_broadcast_contract(batch_df: DataFrame, what: str) -> None:
             f"{what}: micro-batch exceeds the broadcast contract "
             f"(> {cap} rows). The gated ingests broadcast the batch "
             "side BY CONSTRUCTION (no shuffle fallback) — lower "
-            "maxFilesPerTrigger or pre-split oversized input files; "
-            "to raise the ceiling set SPARK_GRAFT_STREAM_BATCH_MAX_ROWS."
+            "maxFilesPerTrigger or pre-split oversized input files."
         )
 
 
@@ -1341,18 +1338,11 @@ def _ensure_band_ledger(
 #: at ANY lake size, and file count past compaction is
 #: ceil(lake_bytes / target) + a handful: proportional to data, never
 #: capped into over-large files.
-APPEND_LAKE_COMPACT_FILES = int(
-    os.environ.get("SPARK_GRAFT_LAKE_COMPACT_FILES", "96")
-)
+APPEND_LAKE_COMPACT_FILES = 96
 
-#: Target on-disk bytes per compacted file (local sandbox sizing; a
-#: real deployment tunes toward its block size). Files at/above this
-#: are "graduated": compaction never touches them again.
-_COMPACT_TARGET_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_LAKE_COMPACT_TARGET_BYTES", str(64 * 1024 * 1024)
-    )
-)
+#: Target on-disk bytes per compacted file. Files at/above this are
+#: "graduated": compaction never touches them again.
+_COMPACT_TARGET_BYTES = 64 * 1024 * 1024
 
 #: Observability for smokes/tests: one dict per compaction event, in
 #: order — {path, small_files, bytes_read, lake_bytes, n_out}.
@@ -1521,7 +1511,6 @@ def read_append_lake(spark: SparkSession, path: str) -> DataFrame:
 def _compact_append_lake(
     spark: SparkSession,
     path: str,
-    target_bytes: int | None = None,
     sort_within: str | None = None,
     statuses: list[tuple[str, int]] | None = None,
 ) -> dict | None:
@@ -1553,7 +1542,7 @@ def _compact_append_lake(
     deleted), healed by the next recovery — never an absent corpus.
     Returns the observability event dict, or None when there is
     nothing worth packing (≤1 small file)."""
-    target = int(target_bytes or _COMPACT_TARGET_BYTES)
+    target = _COMPACT_TARGET_BYTES
     # callers on the per-batch hot path pass the listing they already
     # made for the threshold check — one listStatus RPC, not two
     files = (
@@ -1599,50 +1588,27 @@ def _compact_append_lake(
     }
 
 
-def compact_append_lakes(
-    spark: SparkSession,
-    *paths: str,
-    target_bytes: int | None = None,
-    force: bool = False,
-    threshold: int | None = None,
-) -> list[dict]:
-    """Maintenance seam for append-lake compaction, callable OUT-OF-
-    BAND (r15 verdict #1): a deployment that doesn't want compaction
-    inside the streaming micro-batch sets
-    ``SPARK_GRAFT_LAKE_COMPACT_INLINE=0`` on the ingest and runs this
-    on its own cadence instead. Recovers any pending swap first, then
-    compacts each lake whose sub-target file count exceeds the
-    threshold (or unconditionally under ``force``). Single-writer
-    contract: do not run concurrently with a live ingest writing the
-    same lakes — stop the stream or use the inline path.
+def compact_append_lakes(spark: SparkSession, *paths: str) -> list[dict]:
+    """Append-lake compaction: recovers any pending swap first, then
+    compacts each lake whose sub-target file count exceeds
+    ``APPEND_LAKE_COMPACT_FILES``. The streaming ingests call it after
+    every micro-batch; it is also callable out-of-band as maintenance
+    (r15 verdict #1). Single-writer contract: do not run it
+    concurrently with a live ingest writing the same lakes.
 
     Returns the compaction events performed (also appended to
     ``COMPACTION_EVENTS``)."""
     done = []
     for p in paths:
         _recover_lake_swap(spark, p)
-        target = int(target_bytes or _COMPACT_TARGET_BYTES)
         statuses = _data_file_statuses(spark, p)
-        n_small = sum(1 for _, b in statuses if b < target)
-        if force or n_small > (
-            threshold if threshold is not None else APPEND_LAKE_COMPACT_FILES
-        ):
-            ev = _compact_append_lake(
-                spark, p, target_bytes=target, statuses=statuses
-            )
+        n_small = sum(1 for _, b in statuses if b < _COMPACT_TARGET_BYTES)
+        if n_small > APPEND_LAKE_COMPACT_FILES:
+            ev = _compact_append_lake(spark, p, statuses=statuses)
             if ev is not None:
                 COMPACTION_EVENTS.append(ev)
                 done.append(ev)
     return done
-
-
-def _maybe_compact_lakes(spark: SparkSession, *paths: str) -> None:
-    """Inline (per-micro-batch) compaction trigger. Skipped entirely
-    when ``SPARK_GRAFT_LAKE_COMPACT_INLINE=0`` — the deployment then
-    owns compaction via :func:`compact_append_lakes` out-of-band."""
-    if os.environ.get("SPARK_GRAFT_LAKE_COMPACT_INLINE", "1") == "0":
-        return
-    compact_append_lakes(spark, *paths)
 
 
 def _newcomer_loses(ref_id, my_id) -> Column:
@@ -1738,7 +1704,7 @@ def _two_lake_append(
         # Runs AFTER the ledger append: a crash anywhere in the swap
         # replays the batch, whose appends are no-ops (digest guards),
         # and _recover_lake_swap finishes the swap from the marker.
-        _maybe_compact_lakes(spark, lake_dir, sig_dir)
+        compact_append_lakes(spark, lake_dir, sig_dir)
     finally:
         pinned.unpersist()
 

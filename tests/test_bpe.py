@@ -22,7 +22,6 @@ from data_ingestor_gluejob_script_spark.queries.bpe import (  # noqa: E402
     bpe_pack_token_stream,
     bpe_token_counts,
     bpe_train,
-    bpe_train_distributed,
     load_merges,
     save_merges,
     word_freq_frame,
@@ -185,34 +184,6 @@ def test_bpe_on_sf0001_documents_differential(spark):
     by_id = {r["doc_id"]: r["text"] for r in rows}
     for did, toks in per_doc.items():
         assert "".join(toks) == "".join(ref_words(by_id[did]))
-
-
-def test_bpe_train_distributed_parity(spark):
-    """The fully-distributed trainer (per-merge weighted pair-count
-    agg + pure-Catalyst fold) produces the IDENTICAL merge table to
-    the driver-side trainer — including repeated-symbol words
-    ('aaaa', where the fold's no-remerge property matters), ties, and
-    a checkpoint boundary (checkpoint_every=4 < n_merges)."""
-    texts = [
-        "low low low low low lower lower lowest",
-        "aaaa aaa aa a banana bandana abab",
-        "new new newer newest",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want = _merges_list(bpe_train(df, n_merges=12, min_pair_count=1))
-    got = _merges_list(
-        bpe_train_distributed(
-            df, n_merges=12, min_pair_count=1, checkpoint_every=4
-        )
-    )
-    assert got == want
-    assert len(got) == 12  # the corpus sustains all 12 merges
-    # and the early-stop floor agrees too
-    g2 = _merges_list(bpe_train_distributed(df, 40, min_pair_count=3))
-    w2 = _merges_list(bpe_train(df, 40, min_pair_count=3))
-    assert g2 == w2 and len(g2) < 40
 
 
 def test_bpe_null_and_empty_text_yield_zero_tokens(spark):
@@ -480,86 +451,3 @@ def test_external_trained_merges_drop_in_through_load_merges(spark, tmp_path):
             tok for w in ref_words(r["text"]) for tok in ref_encode(w, merges)
         ]
         assert got.get(r["doc_id"], []) == want
-
-
-def test_bpe_train_distributed_batches_disjoint_merges(spark):
-    """Round-10 verdict item: compatible-merge batching. On a corpus
-    whose hot pairs are symbol-disjoint with strictly separated
-    counts, the distributed trainer learns k merges per aggregation
-    round — rounds <= ceil(n_merges / k) + 1 (the +1 is the final
-    empty/below-floor round) — while still producing the exact
-    sequential merge list."""
-    # 8 two-letter words over disjoint alphabets, strictly decreasing
-    # frequency: every round can batch every remaining candidate
-    words = ["ab", "cd", "ef", "gh", "ij", "kl", "mn", "op"]
-    texts = [
-        " ".join([w] * (100 - 10 * i)) for i, w in enumerate(words)
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want = _merges_list(bpe_train(df, n_merges=8, min_pair_count=1))
-    assert len(want) == 8
-    stats: dict = {}
-    got = _merges_list(
-        bpe_train_distributed(
-            df, n_merges=8, min_pair_count=1, batch_merges=4, stats=stats
-        )
-    )
-    assert got == want
-    assert stats["rounds"] <= 8 // 4 + 1
-    assert stats["batch_sizes"] == [4, 4]
-
-
-def test_bpe_train_distributed_batching_stops_on_interaction(spark):
-    """Adversarial parity: pair (x,y) dominates, (w,x) overlaps it as
-    a spawn parent, and a disjoint low-count pair (c,d) waits below.
-    A naive batcher would take {(x,y), (c,d)} in round 1, but the
-    sequential trainer merges the SPAWNED pair (w, xy) before (c,d) —
-    the prefix selection must stop after (x,y). Asserted by exact
-    merge-list parity against the driver trainer AND by the batch
-    sizes recorded per round."""
-    texts = [" ".join(["wxy"] * 90 + ["xy"] * 10 + ["cd"] * 50)]
-    df = spark.createDataFrame([(0, texts[0])], "doc_id long, text string")
-    want = _merges_list(bpe_train(df, n_merges=4, min_pair_count=1))
-    # sequential order: (x,y) n=100, then spawn (w,xy) n=90, then (c,d)
-    assert want[:3] == [("x", "y"), ("w", "xy"), ("c", "d")]
-    stats: dict = {}
-    got = _merges_list(
-        bpe_train_distributed(
-            df, n_merges=4, min_pair_count=1, batch_merges=4, stats=stats
-        )
-    )
-    assert got == want
-    # round 1 must have batched ONLY (x,y): (w,x) blocks both by
-    # symbol overlap (it ranks above (c,d)) — dominance-scan territory
-    assert stats["batch_sizes"][0] == 1
-
-
-def test_bpe_train_distributed_batch_size_one_matches_batched(spark):
-    """batch_merges=1 degenerates to the round-10 one-merge-per-round
-    behavior; any batch size must give the identical merge table."""
-    texts = [
-        "low low low low low lower lower lowest",
-        "aaaa aaa aa a banana bandana abab",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want = _merges_list(bpe_train(df, n_merges=10, min_pair_count=1))
-    for k in (1, 3, 8):
-        stats: dict = {}
-        got = _merges_list(
-            bpe_train_distributed(
-                df,
-                n_merges=10,
-                min_pair_count=1,
-                batch_merges=k,
-                checkpoint_every=4,
-                stats=stats,
-            )
-        )
-        assert got == want, f"batch_merges={k} diverged"
-        assert sum(stats["batch_sizes"]) == len(want)
-        if k == 1:
-            assert all(s == 1 for s in stats["batch_sizes"])

@@ -192,33 +192,13 @@ def test_clone_heavy_linkage(spark):
     assert got == brute_link(left, right, 1)
 
 
-@pytest.mark.parametrize("passes", [2, 3, 7])
-def test_sharded_passes_identical(spark, passes):
-    """The B-pass hash-prefix sharding (round-12 sf100 scratch fix)
-    must be result-identical to the one-shot form for any B: a pair
-    is found iff it shares a variant hash, each hash lives in exactly
-    one pmod class, and cross-pass duplicates die in the final
-    candidate distinct. Full brute-force equality, both surfaces."""
-    rows = _random_corpus(100, seed=passes)
-    df = spark.createDataFrame(rows, "id int, name string")
-    got = sorted(
-        (r.id_a, r.id_b, r.dist)
-        for r in fuzzy_self_join(
-            df, "id", "name", max_dist=2, passes=passes
-        ).collect()
-    )
-    assert got == brute_self(rows, 2)
-
-
-@pytest.mark.parametrize("passes", [1, 3])
-def test_vid_collisions_recovered(spark, monkeypatch, passes):
+def test_vid_collisions_recovered(spark, monkeypatch):
     """Round-12 review finding: two distinct values sharing an
     xxhash64 share a vid, and the strict vid_a < vid_b self-join can
     never emit their pair — a silent drop. The within-vid recovery
     arm must make results exact under ANY collision rate: force
     pathological collisions (vid = string length, so every same-length
-    pair collides) and assert full brute-force equality, one-shot and
-    sharded."""
+    pair collides) and assert full brute-force equality."""
     from data_ingestor_gluejob_script_spark.queries import fuzzyjoin
 
     monkeypatch.setattr(
@@ -228,187 +208,6 @@ def test_vid_collisions_recovered(spark, monkeypatch, passes):
     df = spark.createDataFrame(rows, "id int, name string")
     got = sorted(
         (r.id_a, r.id_b, r.dist)
-        for r in fuzzy_self_join(
-            df, "id", "name", max_dist=2, passes=passes
-        ).collect()
+        for r in fuzzy_self_join(df, "id", "name", max_dist=2).collect()
     )
     assert got == brute_self(rows, 2)
-
-
-def test_passes_env_seam(spark, monkeypatch):
-    """passes=None reads $SPARK_GRAFT_FUZZY_PASSES — the scale-smoke
-    seam — and still matches brute force."""
-    monkeypatch.setenv("SPARK_GRAFT_FUZZY_PASSES", "4")
-    rows = _random_corpus(80, seed=11)
-    df = spark.createDataFrame(rows, "id int, name string")
-    got = sorted(
-        (r.id_a, r.id_b, r.dist)
-        for r in fuzzy_self_join(df, "id", "name", max_dist=1).collect()
-    )
-    assert got == brute_self(rows, 1)
-
-
-def test_pass_shuffle_cleanup_mechanism(spark):
-    """The sequential-pass design DEPENDS on explicit shuffle-file
-    deletion (completed passes' files measurably survive GC nudges on
-    this JVM, so without it B passes re-accumulate the one-shot
-    scratch): a checkpointed shuffle's ids must leave the map-output
-    tracker and its files must leave the block-manager dirs after
-    _drop_shuffles."""
-    import glob
-    import os
-    import tempfile
-
-    from pyspark.storagelevel import StorageLevel
-
-    from data_ingestor_gluejob_script_spark.queries.fuzzyjoin import (
-        _drop_shuffles,
-        _live_shuffle_ids,
-    )
-
-    sc = spark.sparkContext
-    # Block-manager dirs live under the configured local dirs, resolved
-    # in Spark's own order: SPARK_LOCAL_DIRS, then spark.local.dir,
-    # then the temp dir.
-    local_dirs = (
-        os.environ.get("SPARK_LOCAL_DIRS")
-        or sc.getConf().get("spark.local.dir")
-        or tempfile.gettempdir()
-    ).split(",")
-
-    def shuffle_bytes():
-        total = 0
-        blockmgr_dirs = [
-            d for base in local_dirs for d in glob.glob(f"{base}/blockmgr-*")
-        ]
-        for d in blockmgr_dirs:
-            for root, _, files in os.walk(d):
-                for f in files:
-                    if "shuffle" not in f:
-                        continue
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        return total
-
-    before_ids = _live_shuffle_ids(sc)
-    assert before_ids is not None  # the py4j seam resolves here
-    df = (
-        spark.range(0, 2_000_000)
-        .repartition(16, "id")
-        .groupBy((F.col("id") % 1013).alias("g"))
-        .count()
-        .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-    )
-    created = _live_shuffle_ids(sc) - before_ids
-    assert created, "checkpointed job should have registered shuffles"
-    grew = shuffle_bytes()
-    assert grew > 0, f"no shuffle files found under {local_dirs}"
-    _drop_shuffles(sc, created)
-    assert _live_shuffle_ids(sc) & created == set()
-    assert shuffle_bytes() < grew
-    assert df.count() == 1013  # checkpoint survives its lineage's death
-
-
-def test_plan_scoped_shuffle_attribution(spark):
-    """_plan_shuffle_ids reads a query's shuffles from its OWN
-    executed plan: on a quiet session it must equal the map-output
-    tracker diff around the action (same ids, no more, no less) —
-    the property that makes per-pass cleanup exact without a global
-    diff."""
-    from pyspark.storagelevel import StorageLevel
-
-    from data_ingestor_gluejob_script_spark.queries.fuzzyjoin import (
-        _live_shuffle_ids,
-        _plan_shuffle_ids,
-    )
-
-    sc = spark.sparkContext
-    df = (
-        spark.range(0, 300_000)
-        .select((F.col("id") % 1009).alias("k"), F.col("id").alias("v"))
-        .groupBy("k")
-        .agg(F.sum("v").alias("sv"))
-    )
-    j = (
-        df.alias("a")
-        .join(df.alias("b"), "sv")
-        .select(F.col("a.k").alias("ka"), F.col("b.k").alias("kb"))
-    )
-    before = _live_shuffle_ids(sc)
-    j.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-    diff = _live_shuffle_ids(sc) - before
-    plan_ids = _plan_shuffle_ids(j)
-    assert plan_ids == diff
-    assert plan_ids  # the query genuinely shuffled
-
-
-def test_sharded_passes_safe_beside_concurrent_jobs(spark):
-    """Round-13 lift of the passes>1 concurrency constraint: a
-    sharded fuzzy join's per-pass cleanup is scoped to the pass's
-    own executed plan, so a concurrent job's shuffles on the SAME
-    SparkSession survive (old tracker-diff attribution would delete
-    any shuffle registered during a pass window) and the join's
-    result is still exact."""
-    import threading
-
-    from data_ingestor_gluejob_script_spark.queries.fuzzyjoin import (
-        _live_shuffle_ids,
-        _plan_shuffle_ids,
-    )
-
-    sc = spark.sparkContext
-    rows = _random_corpus(200, seed=13)
-    df = spark.createDataFrame(rows, "id int, name string")
-
-    stop = threading.Event()
-    bg_plan_ids: set[int] = set()
-    bg_frames = []  # hold references so ContextCleaner can't collect
-    bg_errors = []
-
-    def churn():
-        from pyspark.storagelevel import StorageLevel
-
-        i = 0
-        while not stop.is_set():
-            try:
-                d = (
-                    spark.range(0, 50_000)
-                    .select(
-                        (F.col("id") % (101 + i)).alias("g"),
-                        F.col("id").alias("v"),
-                    )
-                    .repartition(4, "g")
-                    .groupBy("g")
-                    .count()
-                )
-                # execute d's OWN plan (an action on a derived frame
-                # would plan its own shuffles) and read back from the
-                # registered shuffles to prove they serve fetches
-                ck = d.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-                assert ck.count() == 101 + i
-                bg_frames.append((d, ck))
-                bg_plan_ids.update(_plan_shuffle_ids(d))
-                i += 1
-            except Exception as e:  # noqa: BLE001 — recorded for assert
-                bg_errors.append(e)
-                return
-
-    t = threading.Thread(target=churn, daemon=True)
-    t.start()
-    try:
-        got = sorted(
-            (r.id_a, r.id_b, r.dist)
-            for r in fuzzy_self_join(
-                df, "id", "name", max_dist=2, passes=3
-            ).collect()
-        )
-    finally:
-        stop.set()
-        t.join(timeout=60)
-    assert not bg_errors, bg_errors
-    assert got == brute_self(rows, 2)
-    # the concurrent job's shuffles were never attributed to a pass:
-    # every one of them is still registered with the driver
-    assert bg_plan_ids and bg_plan_ids <= _live_shuffle_ids(sc)

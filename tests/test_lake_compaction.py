@@ -7,7 +7,7 @@ graduated (at-target) files are never re-read or rewritten, so
 per-compaction cost is O(new data + one runt), never O(lake). Covers:
 every crash window of the scoped protocol, the legacy whole-directory
 marker, the incremental/uncapped properties, the recovery-aware
-reader, the out-of-band seam, and the end-to-end ingest keeping both
+reader, the threshold trigger, and the end-to-end ingest keeping both
 lakes' file counts bounded while content and replay parity stay
 exact."""
 
@@ -217,13 +217,14 @@ def _fat_file(spark, lake, n_rows, seed):
     ).coalesce(1).write.mode("append").parquet(lake)
 
 
-def test_compact_reads_only_the_small_tail(spark, tmp_path):
+def test_compact_reads_only_the_small_tail(spark, tmp_path, monkeypatch):
     """The r15 verdict's named scale-killer: per-compaction cost must
     be O(new data), not O(lake). Graduated (at-target) files are not
     read, not rewritten, not renamed; bytes_read covers exactly the
     small tail."""
     lake = str(tmp_path / "lake")
     target = 64 * 1024
+    monkeypatch.setattr(streaming, "_COMPACT_TARGET_BYTES", target)
     _fat_file(spark, lake, 60_000, 0)  # ~2 MB >> target: graduated
     grad = {
         n: os.path.getsize(os.path.join(lake, n)) for n in _parquets(lake)
@@ -237,7 +238,7 @@ def test_compact_reads_only_the_small_tail(spark, tmp_path):
         if n not in grad
     )
     before = _vals(spark, lake)
-    ev = _compact_append_lake(spark, lake, target_bytes=target)
+    ev = _compact_append_lake(spark, lake)
     assert ev["bytes_read"] == small_bytes
     assert ev["small_files"] == 10
     assert ev["lake_bytes"] > 10 * ev["bytes_read"]  # lake >> tail
@@ -256,7 +257,7 @@ def test_compact_reads_only_the_small_tail(spark, tmp_path):
         for n in _parquets(lake)
         if n not in grad
     )
-    ev2 = _compact_append_lake(spark, lake, target_bytes=target)
+    ev2 = _compact_append_lake(spark, lake)
     assert ev2["bytes_read"] == tail2
     assert ev2["bytes_read"] <= runt_bytes + 11 * (tail2 - runt_bytes)
     for n, sz in grad.items():
@@ -265,13 +266,16 @@ def test_compact_reads_only_the_small_tail(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_compact_output_files_uncapped_and_target_sized(spark, tmp_path):
+def test_compact_output_files_uncapped_and_target_sized(
+    spark, tmp_path, monkeypatch
+):
     """r15 verdict: the old min(64, ...) output cap meant any lake
     past 64x the target got over-large files (1.5 TB files at 100 TB).
     With a scaled-down target, a small tail worth >64 targets must
     pack into >64 outputs, each under ~2x target."""
     lake = str(tmp_path / "lake")
     target = 4 * 1024
+    monkeypatch.setattr(streaming, "_COMPACT_TARGET_BYTES", target)
     for i in range(12):
         _fat_file(spark, lake, 1000, 10_000 * i)  # ~33 KB each: small? no -
         # 1000 md5 rows ~ 40 KB > target, so scale rows down below
@@ -288,34 +292,31 @@ def test_compact_output_files_uncapped_and_target_sized(spark, tmp_path):
             if os.path.getsize(os.path.join(lake, n)) < target
         )
     n_rows_before = len(_vals(spark, lake))
-    ev = _compact_append_lake(spark, lake, target_bytes=target)
+    ev = _compact_append_lake(spark, lake)
     assert ev is not None
     assert ev["n_out"] > 64, ev  # cap is gone
     assert ev["n_out"] == max(1, ev["bytes_read"] // target)
     assert len(_vals(spark, lake)) == n_rows_before
 
 
-def test_out_of_band_seam_and_inline_disable(spark, tmp_path, monkeypatch):
+def test_compact_append_lakes_threshold_trigger(spark, tmp_path, monkeypatch):
+    """compact_append_lakes packs a lake only once its sub-target file
+    count exceeds APPEND_LAKE_COMPACT_FILES, and records the event."""
     lake = str(tmp_path / "lake")
     for i in range(6):
         _append_one(spark, lake, [(i,)])
-    # inline disabled: the per-batch trigger is a no-op
-    monkeypatch.setenv("SPARK_GRAFT_LAKE_COMPACT_INLINE", "0")
-    monkeypatch.setattr(streaming, "APPEND_LAKE_COMPACT_FILES", 2)
-    streaming._maybe_compact_lakes(spark, lake)
+    # at the threshold: no-op
+    monkeypatch.setattr(streaming, "APPEND_LAKE_COMPACT_FILES", 6)
+    assert compact_append_lakes(spark, lake) == []
     assert _n_parquet_files(spark, lake) == 6
-    # the out-of-band seam compacts (and records the event)
+    # past it: compacts (and records the event)
+    monkeypatch.setattr(streaming, "APPEND_LAKE_COMPACT_FILES", 5)
     n_events = len(streaming.COMPACTION_EVENTS)
-    done = compact_append_lakes(spark, lake, threshold=2)
+    done = compact_append_lakes(spark, lake)
     assert len(done) == 1 and done[0]["small_files"] == 6
     assert len(streaming.COMPACTION_EVENTS) == n_events + 1
     assert _vals(spark, lake) == list(range(6))
     assert _n_parquet_files(spark, lake) == 1
-    # below threshold: no-op without force; force packs
-    _append_one(spark, lake, [(6,)])
-    assert compact_append_lakes(spark, lake, threshold=5) == []
-    assert len(compact_append_lakes(spark, lake, force=True)) == 1
-    assert _vals(spark, lake) == list(range(7))
 
 
 @pytest.mark.slow

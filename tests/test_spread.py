@@ -11,7 +11,6 @@ import sys
 from pathlib import Path
 
 import pyspark.sql.functions as F
-import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -135,38 +134,36 @@ def test_load_memoizes_analyzed_frame_per_session(spark, tmp_path):
 def test_load_memo_detects_in_process_rewrite(spark, tmp_path):
     """r17 (advice r16): the memo key carries a file-listing
     fingerprint, so a table REWRITTEN within the process gets a fresh
-    read — not a stale plan served from the memo."""
-    from data_ingestor_gluejob_script_spark.queries._util import load
+    read — not a stale plan served from the memo — and the superseded
+    entry is dropped. A URI os.stat cannot list (file://, s3a://) is
+    never memoized, so it reads fresh too."""
+    from data_ingestor_gluejob_script_spark.queries._util import (
+        _session_memo,
+        load,
+    )
 
     d1 = tmp_path / "sfy"
     d1.mkdir()
     path = str(d1 / "lineitem.parquet")
-    spark.range(5).select(F.col("id").alias("l_orderkey")).write.parquet(path)
+
+    def rewrite(n):
+        spark.range(n).select(F.col("id").alias("l_orderkey")).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    rewrite(5)
     a = load(spark, str(d1), "lineitem")
     assert a.count() == 5
-    spark.range(9).select(F.col("id").alias("l_orderkey")).write.mode(
-        "overwrite"
-    ).parquet(path)
+    rewrite(9)
     b = load(spark, str(d1), "lineitem")
     assert b is not a
     assert b.count() == 9
+    assert len([k for k in _session_memo(spark) if path in k]) == 1
 
-
-def test_pin_storage_level_env_seam(monkeypatch):
-    """r17 (r16 verdict #7): SPARK_GRAFT_PIN_LEVEL selects the
-    storage level for the corpus-sized localCheckpoint pins; unset
-    keeps pyspark's default (None), junk fails loudly."""
-    from pyspark import StorageLevel
-
-    from data_ingestor_gluejob_script_spark.session import pin_storage_level
-
-    monkeypatch.delenv("SPARK_GRAFT_PIN_LEVEL", raising=False)
-    assert pin_storage_level() is None
-    monkeypatch.setenv("SPARK_GRAFT_PIN_LEVEL", "DISK_ONLY")
-    assert pin_storage_level() == StorageLevel.DISK_ONLY
-    monkeypatch.setenv("SPARK_GRAFT_PIN_LEVEL", "NOT_A_LEVEL")
-    with pytest.raises(ValueError):
-        pin_storage_level()
+    uri = f"file://{d1}"
+    assert load(spark, uri, "lineitem").count() == 9
+    rewrite(4)
+    assert load(spark, uri, "lineitem").count() == 4
 
 
 def test_spread_memoizes_decision_on_the_frame(spark, tmp_path):

@@ -15,8 +15,8 @@ dropped — what makes the drop decision batching-invariant), not raw
 input rows.
 
 r15 addition: the signature and curated-corpus lakes now compact
-themselves past SPARK_GRAFT_LAKE_COMPACT_FILES appended files
-(streaming._maybe_compact_lakes, swap-marker protocol) — the smoke
+themselves past streaming.APPEND_LAKE_COMPACT_FILES appended files
+(streaming.compact_append_lakes, swap-marker protocol) — the smoke
 records every compaction event and the per-lake final file counts, so
 a long-horizon run shows per-batch ms staying flat ACROSS compaction
 events instead of climbing with file count.
